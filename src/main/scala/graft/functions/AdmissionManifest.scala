@@ -3,15 +3,14 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** MANIFEST publish mode for the streaming-admission stores — the
-  * object-store-safe alternative to the default listing layout
-  * ([[Dedup.admitByKeys]]'s `adm_kb=` directories + rename-as-commit
-  * publishes). The default layout is correct on HDFS-semantics
-  * filesystems, but on object stores rename is a copy and listing is
-  * eventually consistent, so the store's source of truth must move
-  * into a commit log. This mode reuses the codes stores' exact
-  * discipline ([[GenerationLog]] — tmp-write + rename-without-
-  * overwrite CAS on `_commits/<v>`, retention GC, orphan vacuum):
+/** The streaming-admission store ([[Dedup.admitByKeys]]) — a commit
+  * log over immutable files, correct on object stores (rename is a
+  * copy, listing is eventually consistent) as well as on
+  * HDFS-semantics filesystems: data files are never renamed, and no
+  * read of committed state depends on a directory listing. It reuses
+  * the codes stores' exact discipline ([[GenerationLog]] — tmp-write
+  * + rename-without-overwrite CAS on `_commits/<v>`, retention GC,
+  * orphan vacuum):
   *
   *  - the committed generation is a MANIFEST-LIST: a small ROOT
   *    manifest carrying the layout declaration (`nBuckets`,
@@ -21,16 +20,11 @@ import org.apache.spark.sql.functions._
   *    turn carry `bucket addr -> [files]`. A mutation stages fresh
   *    group manifests for ONLY the groups its touched addresses fall
   *    in and commits a root swapping those references — O(touched)
-  *    commit payload however many files the store holds, the same
-  *    invariant every other operation in this store already has. (A
-  *    single-level manifest was the r19 shape; its full-file-list
-  *    serialization was the store's one O(store files)-per-commit
-  *    term, measured at exponent 0.092 in the maintenance A/B.)
+  *    commit payload however many files the store holds;
   *  - every file entry carries the BYTE SIZE recorded at staging
   *    time, so `stats`/`bucketSizes`/the fold's byte budget read the
   *    manifest instead of issuing one `getFileStatus` round-trip per
-  *    file — on an object store that sweep was O(files) sequential
-  *    RPCs per maintenance turn;
+  *    file;
   *  - data files NEVER move: every mutation (tail append, fold,
   *    compact, split, removal, expiry, stamp, rebucket) writes fresh
   *    uniquely-named directories BESIDE the live ones and commits a
@@ -43,32 +37,15 @@ import org.apache.spark.sql.functions._
   *    attempt ([[GenerationLog.commitWithRetry]], the codes stores'
   *    append rule): a lost CAS race deletes the attempt's staging
   *    (data files AND group manifests) and re-derives against the
-  *    winner's manifest, so commits are SERIALIZABLE — the listing
-  *    layout's drain loops (a removal re-scanning until provably
-  *    clean beside a concurrent fold) and its transient
-  *    FAILED_READ_FILE turn failures structurally disappear, as does
-  *    the decision-window split race ([[Dedup.admitByKeys]]'s
-  *    re-validation loop): a completed split never deletes the files
-  *    a concurrent decision is reading, and maintenance only MOVES
-  *    rows, so a decision against any generation sees the complete
-  *    key set.
+  *    winner's manifest, so commits are SERIALIZABLE — a removal is
+  *    complete in one commit beside a concurrent fold, and a
+  *    completed split never deletes the files a concurrent decision
+  *    is reading (maintenance only MOVES rows, so a decision against
+  *    any generation sees the complete key set).
   *
-  * The admission SEMANTICS are byte-identical to the listing layout
-  * (same key derivation, same routed/deep addressing, same window
-  * rules — the parity spec pins it); only publication differs. Mode
-  * is declared at store creation ([[Dedup.nearDupFilterBatch]]'s
-  * `manifestStore` flag) and detected from the store root (`_commits`
-  * exists) ever after — every maintenance entry point dispatches
-  * automatically.
-  *
-  * CHOOSING the publish mode: the listing layout is the default and
-  * the right call on HDFS-semantics filesystems (atomic rename,
-  * consistent listing) — no commit log to maintain, no manifest to
-  * serialize. Pick `manifestStore = true` for object stores (S3-like:
-  * rename is a copy, listing is eventually consistent) or whenever
-  * takedown latency must not depend on drain rescans beside a hot
-  * writer. The decision is per-store and permanent (no in-place
-  * conversion; migrate by replaying admissions into a fresh store).
+  * A store is created by its first admission and detected from the
+  * store root (`_commits` exists) ever after;
+  * [[AdmissionManifestStore.isManifestStore]] is the one layout check.
   */
 private[graft] final class AdmissionManifestStore(storePath: String) {
   import AdmissionManifestStore._
@@ -251,9 +228,8 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
     * `dir` while KEEPING `adm_kb` as a data column: the partition
     * directory (`adm_kb_p=`) exists only so [[stagedByAddr]] can
     * assign staged files to addresses from the listing, never so a
-    * reader can re-infer the address. In manifest mode the MANIFEST
-    * is the address map, so reads must not depend on directory
-    * structure — keeping the column in the data lets every read be
+    * reader can re-infer the address. The MANIFEST is the address
+    * map, so reads must not depend on directory structure — keeping the column in the data lets every read be
     * ONE plain parquet read of the manifest's file lists (no
     * basePath partition discovery, no per-generation reader). The
     * per-generation-reader shape this replaces was the store's real
@@ -372,9 +348,9 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
 
   /** Fold the tail into the bucket lists when it exceeds the file or
     * byte budget (byte sizes read from the manifest — no status
-    * RPCs), then compact folded buckets over the file budget — the
-    * listing layout's [[Dedup.foldAdmissionTail]] under manifest
-    * commits. Everything derives inside the attempt, so a raced fold
+    * RPCs), then compact folded buckets over the file budget. Expired
+    * rows (`expireBefore`) are shed in the fold itself — they never
+    * reach L1. Everything derives inside the attempt, so a raced fold
     * re-reads the winner's tail. Only the folded addresses' groups
     * rewrite. Returns the folded bucket addresses.
     */
@@ -394,8 +370,10 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
           val raw = Dedup.inWindow(
             readFiles(spark, man.tail).get, expireBefore)
           // re-route through the CURRENT depth map (stored adm_kb was
-          // routed at admission time and may predate splits since) —
-          // same rule as the listing fold
+          // routed at admission time and may predate splits since) so
+          // folded rows land in their live — deepest — bucket; stale
+          // placement would still be probe-correct (shallower on the
+          // same chain), this keeps deep buckets from re-growing
           val splits = man.splits
           val routed =
             if (splits.depthByAddr.isEmpty) raw
@@ -427,7 +405,10 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
   /** Rewrite any of `buckets` holding more than `maxFiles` files into
     * one deduplicated (newest-stamp) file each — one staged
     * partitioned write, one commit swapping the touched groups'
-    * lists.
+    * lists. `expireBefore` > 0 folds retention into the rewrite for
+    * free: rows stamped before it are dropped while the bucket is
+    * being rewritten anyway, so a growing bucket keeps shedding
+    * expired rows with no extra maintenance pass.
     */
   def compactBuckets(spark: SparkSession, buckets: Seq[Int],
       maxFiles: Int, expireBefore: Long): Seq[Int] = {
@@ -443,9 +424,12 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
         val cur = readFiles(spark, over.values.flatten.toSeq).get
         val live =
           if (expireBefore <= 0L) cur else Dedup.inWindow(cur, expireBefore)
-        // collapse replayed appends keeping the NEWEST stamp (max
-        // ignores nulls; all-legacy groups stay null = in-window
-        // forever) — identical to the listing compactor
+        // collapse replayed appends keeping the NEWEST stamp — max is
+        // the suppression-conservative choice for windowed dedup
+        // (plain distinct would keep one row per (key, ts) and let
+        // replays grow the store); max ignores nulls, so an unstamped
+        // row merged with a stamped one takes the concrete stamp and
+        // an all-unstamped group stays null (= in-window forever)
         val dedup =
           if (!live.columns.contains("adm_ts")) live.distinct()
           else live.groupBy(live.columns.filterNot(_ == "adm_ts")
@@ -467,9 +451,9 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
 
   /** Split ONE bucket into its power-of-two children — the online
     * growth step. One commit carries the rekeyed lists AND the depth
-    * declaration atomically, so the listing layout's declare-depth-
-    * before-moving ordering (and its decision-window race) has no
-    * manifest-mode counterpart. Returns rows rewritten.
+    * declaration atomically, so no reader ever sees a relocated row
+    * without the deeper chain that reaches it. Returns rows
+    * rewritten.
     */
   def splitBucket(spark: SparkSession, addr: Int): Long = {
     var moved = 0L
@@ -515,9 +499,9 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
   /** The shared store rewrite under removal/expiry/stamp: read the
     * target addresses' files (and the tail), stage `keepOf`'s output,
     * commit the swapped lists. `targetsOf = Some(f)` re-derives the
-    * touched addresses from the CURRENT manifest on every attempt
-    * (the serializable-commit twin of the listing drain's per-pass
-    * chain re-expansion) and reads only their groups; `None` is the
+    * touched addresses from the CURRENT manifest on every attempt (so
+    * a concurrent split can never move a target row off the
+    * rewrite's chains) and reads only their groups; `None` is the
     * full sweep (every bucket — O(groups) manifest reads, which a
     * sweep's O(store) data read dominates anyway). Returns `hitsOf`'s
     * row count.
@@ -586,21 +570,12 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
     hits
   }
 
-  /** Transform-shaped rewrite (stamping): every target row is kept,
-    * transformed — `hitsOf` still gates which lists rewrite.
-    */
-  def transformStore(spark: SparkSession,
-      hitsOf: DataFrame => DataFrame,
-      keepOf: DataFrame => DataFrame): Long =
-    rewriteStore(spark, None, hitsOf, keepOf)
-
   /** Full layout migration to `newN` base buckets — one read of every
     * row, one staged partitioned write, ONE commit swapping the whole
-    * layout (nBuckets, depth map reset, every group). Unlike the
-    * listing layout's [[Dedup.rebucketAdmitted]] this is NOT
-    * exclusive: concurrent probes keep their generation, and a raced
-    * mutation simply re-derives against the migrated manifest.
-    * Returns rows moved.
+    * layout (nBuckets, depth map reset, every group). Not exclusive:
+    * concurrent probes keep their generation, and a raced mutation
+    * simply re-derives against the migrated manifest. Returns rows
+    * moved.
     */
   def rebucket(spark: SparkSession, newN: Int): Long = {
     require(newN > 0, s"newN must be positive: $newN")
@@ -643,13 +618,15 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
 
   /** Operational snapshot from the manifest alone — byte sizes were
     * recorded at staging time, so this issues ZERO per-file status
-    * RPCs (the r19 shape swept one `getFileStatus` per file — O(files)
-    * sequential round-trips per maintenance turn on an object store).
+    * RPCs (one `getFileStatus` per file would be O(files) sequential
+    * round-trips per maintenance turn on an object store).
     */
   def stats(spark: SparkSession): Dedup.AdmissionStoreStats = {
     val man = resolved(spark)
-    val perBucket = allBuckets(spark, man).map { case (_, fls) =>
-      (fls.length, fls.map(_.size).sum) }
+    // (files, bytes) per bucket — a Seq, never a Map: buckets with
+    // equal file counts must not collapse into one entry
+    val perBucket = allBuckets(spark, man).values.toSeq.map(fls =>
+      (fls.length, fls.map(_.size).sum))
     Dedup.AdmissionStoreStats(
       buckets = perBucket.size,
       bucketFiles = perBucket.map(_._1.toLong).sum,
@@ -658,7 +635,6 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
         if (perBucket.isEmpty) 0 else perBucket.map(_._1).max,
       tailFiles = man.tail.length,
       tailBytes = man.tail.map(_.size).sum,
-      rebucketPending = false, // migrations commit atomically here
       declaredBuckets = Some(man.nBuckets),
       maxDepth = man.maxDepth,
       splitBuckets = man.depthByAddr.size)
@@ -682,13 +658,12 @@ private[graft] final class AdmissionManifestStore(storePath: String) {
     * directory names against referenced entries, which are FILE paths
     * here — so the admission store carries its own sweep.)
     *
-    * Default horizon 24 h, matching the listing layout's stale-staging
-    * rationale: every mutation here derives its staging INSIDE the
-    * commit-retry attempt, so an attempt stalled past the horizon (GC
-    * pause, slow object store) whose staging a vacuum swept can still
-    * WIN its CAS and commit a manifest referencing deleted files —
-    * silently losing admitted keys. A 1 h margin is inside plausible
-    * stall territory; a day is not.
+    * Default horizon 24 h: every mutation here derives its staging
+    * INSIDE the commit-retry attempt, so an attempt stalled past the
+    * horizon (GC pause, slow object store) whose staging a vacuum
+    * swept can still WIN its CAS and commit a manifest referencing
+    * deleted files — silently losing admitted keys. A 1 h margin is
+    * inside plausible stall territory; a day is not.
     */
   def vacuum(spark: SparkSession, olderThanMs: Long = 86400000L)
       : Seq[String] = {
@@ -736,7 +711,7 @@ private[graft] object AdmissionManifestStore {
     * commit cache (commit files are immutable, so a shared handle is
     * always coherent), and a per-call `new` would re-parse the whole
     * retained manifest history on every operation — the measured
-    * scale term in the manifest-mode maintenance turn.
+    * scale term in the maintenance turn.
     *
     * LRU-capped: a long-lived driver that creates many short-lived
     * stores (fresh scratch paths per run — exactly what the bench and
@@ -769,12 +744,32 @@ private[graft] object AdmissionManifestStore {
   private[graft] def cachedHandleCount: Int =
     instances.synchronized(instances.size)
 
-  /** Mode detection: a store whose root carries a `_commits` log is a
-    * manifest store; everything else is the listing layout.
+  /** The one on-disk layout check: true when the root carries a
+    * `_commits` log (a store exists), false when nothing has been
+    * admitted there yet. A root left by the retired LISTING layout —
+    * a `_nbuckets` declaration, `adm_kb=` bucket directories or a
+    * `tail/` directory, and no `_commits` — is REFUSED: its rows are
+    * invisible to this store, and treating the path as empty would
+    * silently re-admit every duplicate it suppressed. There is no
+    * in-place conversion; replay the admissions into a fresh store.
     */
   def isManifestStore(fs: org.apache.hadoop.fs.FileSystem,
-      storePath: String): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(storePath, "_commits"))
+      storePath: String): Boolean = {
+    val root = new org.apache.hadoop.fs.Path(storePath)
+    if (fs.exists(new org.apache.hadoop.fs.Path(root, "_commits")))
+      return true
+    val listing =
+      fs.exists(new org.apache.hadoop.fs.Path(root, "_nbuckets")) ||
+        scala.util.Try(fs.listStatus(root)).getOrElse(Array.empty)
+          .exists(s => s.isDirectory &&
+            (s.getPath.getName.startsWith("adm_kb=") ||
+              s.getPath.getName == "tail"))
+    require(!listing,
+      s"admission store at $storePath is in the retired listing layout " +
+        "(adm_kb=/tail directories, no _commits log), which is no longer " +
+        "read — replay its admissions into a fresh store path")
+    false
+  }
 
   /** Test seam: invoked after an attempt's staging is fully written,
     * immediately before its commit claim (the codes stores' seam) —
@@ -790,9 +785,9 @@ private[graft] object AdmissionManifestStore {
   */
 private[graft] final case class AdmFile(path: String, size: Long)
 
-/** The ROOT of one committed generation of a manifest-mode admission
-  * store: the layout declaration (base buckets, group slicing, the
-  * depth map — O(split buckets), collapsed by a rebase), the bounded
+/** The ROOT of one committed generation of an admission store: the
+  * layout declaration (base buckets, group slicing, the depth map —
+  * O(split buckets), collapsed by a rebase), the bounded
   * tail's file list, and one reference per non-empty address group to
   * the immutable group-manifest file carrying that slice's
   * `bucket addr -> [files]` lists. Bucket data paths are shaped
@@ -852,9 +847,10 @@ private[graft] object AdmissionManifest {
     }
     require(nBuckets > 0, "manifest missing nbuckets")
     require(nGroups > 0, "manifest missing ngroups")
-    // the listing layout's _splits read-bounds, applied to the folded-
-    // in declaration: a damaged manifest must fail loudly, not
-    // mis-route probe chains
+    // bound the depth declaration on READ: a huge maxdepth would make
+    // the `nBuckets << maxDepth` moduli overflow into garbage bucket
+    // addresses, silently mis-routing probe chains — an out-of-range
+    // manifest is unparseable instead
     require(maxDepth >= 0 && maxDepth <= 30 &&
       (nBuckets.toLong << maxDepth) <= Int.MaxValue.toLong,
       s"manifest maxdepth $maxDepth out of range for base $nBuckets")

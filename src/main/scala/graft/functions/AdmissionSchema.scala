@@ -9,9 +9,8 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * column must read as null — the fail-closed legacy rule). mergeSchema
   * runs a Spark JOB that fetches and merges every file's footer on
   * every read — a planning+scheduling round-trip per probe, per fold,
-  * per compact, on files that are IMMUTABLE in both publish modes
-  * (listing-layout mutations publish fresh unique names; manifest data
-  * files are write-once by the commit protocol).
+  * per compact, on files that are IMMUTABLE (the store's data files
+  * are write-once by its commit protocol).
   *
   * This helper resolves the same merged schema driver-side instead:
   * each file's Spark schema is read ONCE from its parquet footer's
@@ -26,13 +25,17 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * returns None and the caller falls back to the mergeSchema read, so
   * the fallback preserves the old semantics bit-for-bit.
   */
-private[functions] object AdmissionSchema {
+private[graft] object AdmissionSchema {
 
   /** (absolute path, byte length) → footer schema. Paths are never
     * reused by the store writers (Spark part-file UUID names; every
     * rewrite publishes fresh names), and the length guards the
-    * theoretical same-name rewrite. Cleared wholesale at the cap — an
-    * eviction only costs a footer re-read.
+    * theoretical same-name rewrite. Only DEFINITIVE results are
+    * memoized: a footer that was read and carries no Spark schema key
+    * caches None, but a failed read (a transient filesystem error)
+    * caches nothing, so the next read of that file retries the fast
+    * path. Cleared wholesale at the cap — an eviction only costs a
+    * footer re-read.
     */
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long), Option[StructType]]()
@@ -46,20 +49,22 @@ private[functions] object AdmissionSchema {
     val k = (path.toString, len)
     val hit = cache.get(k)
     if (hit != null) return hit
-    val resolved: Option[StructType] = scala.util.Try {
+    scala.util.Try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromPath(path, conf)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val json =
-        try reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get(sparkSchemaKey)
-        finally reader.close()
-      Option(json).flatMap(j => scala.util.Try(
-        DataType.fromJson(j).asInstanceOf[StructType]).toOption)
-    }.toOption.flatten
-    if (cache.size() >= maxEntries) cache.clear()
-    cache.put(k, resolved)
-    resolved
+      try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(sparkSchemaKey)
+      finally reader.close()
+    } match {
+      case scala.util.Failure(_) => None // not memoized: retry next read
+      case scala.util.Success(json) =>
+        val resolved = Option(json).flatMap(j => scala.util.Try(
+          DataType.fromJson(j).asInstanceOf[StructType]).toOption)
+        if (cache.size() >= maxEntries) cache.clear()
+        cache.put(k, resolved)
+        resolved
+    }
   }
 
   /** Name-wise merge in first-seen order; all fields nullable (a

@@ -3,14 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.Dedup
 
-/** MANIFEST publish mode for the admission stores
-  * ([[graft.functions.AdmissionManifestStore]]): the full behavioral
-  * matrix the listing-layout specs pin — admission/replay/windowing,
-  * takedowns, expiry, stamping, online splits, rebucket, the policy
-  * pass — plus the mode-specific properties (commit-log source of
-  * truth, data files never moved, serializable commits under a lost
-  * CAS race, retention GC, orphan vacuum) and LISTING-MODE PARITY on
-  * an identical operation sequence.
+/** The commit-log properties of the admission store
+  * ([[graft.functions.AdmissionManifestStore]]) — creation and
+  * detection, the refusal of a retired listing-layout store, a pinned
+  * decision sequence across every mutation, data files never moved,
+  * serializable commits under a lost CAS race, torn commits, retention
+  * GC and orphan vacuum, O(touched) commit payloads, and maintenance
+  * beside a live writer. DedupSpec and EngineProperties pin the
+  * admission semantics themselves on the same store.
   */
 class DedupManifestSpec extends SparkTestBase {
   import spark.implicits._
@@ -32,38 +32,92 @@ class DedupManifestSpec extends SparkTestBase {
     if (!fs.exists(dir)) 0 else fs.listStatus(dir).length
   }
 
-  test("creation, detection, and the in-place-conversion refusal") {
+  test("creation and detection: the first admission creates the commit " +
+    "log, later callers find it, and the layout contract holds") {
     val store = tmpDir("mfcreate")
     val fs = fsOf(store)
     val s1 = Dedup.nearDupFilterBatch(
       Seq((0L, textA), (1L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", manifestStore = true)
+      store, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(s1 === Set(0L, 1L))
     assert(fs.exists(new org.apache.hadoop.fs.Path(store, "_commits")),
-      "manifest store must carry a _commits log")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(store,
-      Dedup.layoutMarkerName)),
-      "manifest store must not write listing-layout markers")
-    // mode detection: a caller WITHOUT the flag lands on the same store
+      "the first admission must create the _commits log")
+    // detection: a later caller lands on the same store
     val s2 = Dedup.nearDupFilterBatch(
       Seq((2L, textA), (3L, textC)).toDF("doc_id", "text"),
       store, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(s2 === Set(3L), s"manifest store not detected: $s2")
-    // layout contract: a mismatched modulus is refused like listing mode
+    assert(s2 === Set(3L), s"store not detected: $s2")
+    // layout contract: a mismatched modulus is refused
     intercept[IllegalArgumentException] {
       Dedup.nearDupFilterBatch(
         Seq((4L, textB)).toDF("doc_id", "text"),
         store, "doc_id", "text", nBuckets = 8)
     }
-    // an existing LISTING store cannot be converted in place
-    val listing = tmpDir("mfconvert")
-    Dedup.nearDupFilterBatch(Seq((0L, textA)).toDF("doc_id", "text"),
-      listing, "doc_id", "text")
-    intercept[IllegalArgumentException] {
-      Dedup.nearDupFilterBatch(Seq((1L, textB)).toDF("doc_id", "text"),
-        listing, "doc_id", "text", manifestStore = true)
+  }
+
+  test("a store left in the retired listing layout is refused by " +
+    "admission, takedown and maintenance; an absent store stays a no-op") {
+    // the three on-disk signatures of the listing layout, each without
+    // a _commits log: the layout declaration, a bucket directory, and
+    // the L0 tail directory
+    def fabricate(name: String)(plant: String => Unit): String = {
+      val store = tmpDir(name)
+      plant(store)
+      store
+    }
+    val fs = fsOf(tmpDir("mflegacy-fs"))
+    val stores = Seq(
+      fabricate("mflegacy-nb") { s =>
+        val out = fs.create(new org.apache.hadoop.fs.Path(s, "_nbuckets"))
+        out.write("64".getBytes("UTF-8")); out.close()
+      },
+      fabricate("mflegacy-kb") { s =>
+        Seq((0L, 1, "k")).toDF("doc_id", "band", "band_key")
+          .write.parquet(s"$s/adm_kb=3")
+      },
+      fabricate("mflegacy-tail") { s =>
+        Seq((0L, 1, "k", 3)).toDF("doc_id", "band", "band_key", "adm_kb")
+          .write.parquet(s"$s/tail")
+      })
+    def refused(store: String)(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(store) &&
+        e.getMessage.contains("listing layout") &&
+        e.getMessage.contains("replay"),
+        s"refusal must name the path and the migration: ${e.getMessage}")
+    }
+    stores.foreach { store =>
+      refused(store) {
+        Dedup.nearDupFilterBatch(Seq((9L, textA)).toDF("doc_id", "text"),
+          store, "doc_id", "text")
+      }
+      refused(store) {
+        Dedup.nearDupRemove(Seq((0L, textA)).toDF("doc_id", "text"),
+          store, "doc_id", "text")
+      }
+      refused(store) {
+        Dedup.maintainAdmitted(spark, store,
+          Dedup.AdmissionMaintenancePolicy(compactOverFiles = 1))
+      }
+      // refusal is read-only: no commit log was started beside the
+      // old files
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(store, "_commits")),
+        s"a refused call mutated $store")
+    }
+    // nothing admitted yet (the root may or may not exist): maintenance
+    // is a no-op, not a refusal
+    for (absent <- Seq(tmpDir("mfabsent"), tmpDir("mfabsent2") + "/none")) {
+      assert(Dedup.maintainAdmitted(spark, absent,
+          Dedup.AdmissionMaintenancePolicy(compactOverFiles = 1,
+            maxBucketBytes = 1L, expireBefore = 1L))
+        === Dedup.AdmissionMaintenanceReport(0L, Nil, Nil))
+      assert(Dedup.nearDupRemove(Seq((0L, textA)).toDF("doc_id", "text"),
+        absent, "doc_id", "text") === 0L)
+      assert(Dedup.removeAdmittedIds(spark, absent, Set(0L)) === 0L)
+      assert(Dedup.admissionStoreStats(spark, absent).declaredBuckets
+        .isEmpty)
     }
   }
 
@@ -76,7 +130,7 @@ class DedupManifestSpec extends SparkTestBase {
     // store A: 4-bucket layout, resolved through the shared handle
     Dedup.nearDupFilterBatch(
       Seq((0L, textA)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 4, manifestStore = true)
+      store, "doc_id", "text", nBuckets = 4)
     assert(Dedup.admissionStoreStats(spark, store)
       .declaredBuckets.contains(4))
     // another process deletes the store and re-creates it at the SAME
@@ -86,7 +140,7 @@ class DedupManifestSpec extends SparkTestBase {
     fs.delete(new org.apache.hadoop.fs.Path(store), true)
     Dedup.nearDupFilterBatch(
       Seq((10L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, manifestStore = true)
+      store, "doc_id", "text", nBuckets = 2)
     val stats = Dedup.admissionStoreStats(spark, store)
     assert(stats.declaredBuckets.contains(2),
       s"stale cache served the dead store's manifest: $stats")
@@ -102,44 +156,34 @@ class DedupManifestSpec extends SparkTestBase {
       s"handle cache unbounded: ${AdmissionManifestStore.cachedHandleCount}")
   }
 
-  test("parity: an identical admit/fold/split/remove/expire sequence " +
-    "produces identical decisions in both publish modes") {
-    def run(manifest: Boolean): Seq[Set[Long]] = {
-      val store = tmpDir(s"mfparity$manifest")
-      val out = Seq.newBuilder[Set[Long]]
-      def admit(docs: Seq[(Long, String)], ts: Long): Set[Long] =
-        Dedup.nearDupFilterBatch(docs.toDF("doc_id", "text"), store,
-          "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
-          admittedAt = ts, suppressSince = ts - 5000L,
-          manifestStore = manifest)
-          .select("doc_id").collect().map(_.getLong(0)).toSet
-      out += admit(Seq((0L, textA), (1L, textB), (2L, textC)), 1000L)
-      out += admit(Seq((10L, textA), (11L, textB)), 2000L) // both dups
-      // replay of the FIRST batch at its original stamp (idempotence)
-      out += admit(Seq((0L, textA), (1L, textB), (2L, textC)), 1000L)
-      // online growth, then decisions must hold
-      val splitAddr = (0 to 1).find(b =>
-        Dedup.splitAdmittedBucket(spark, store, b) > 0L)
-      assert(splitAddr.nonEmpty, "no bucket had rows to split")
-      out += admit(Seq((20L, textA), (21L, textC),
-        (22L, "deterministic replay semantics for micro batch sinks")),
-        3000L)
-      // takedown frees re-admission of similar content
-      assert(Dedup.nearDupRemove(Seq((0L, textA)).toDF("doc_id", "text"),
-        store, "doc_id", "text", nBuckets = 2) > 0L)
-      out += admit(Seq((30L, textA), (31L, textB)), 4000L)
-      // window expiry: everything admitted before 4000 stops suppressing
-      // at suppressSince 4500 (admittedAt 9500)
-      out += admit(Seq((40L, textB), (41L, textC)), 9500L)
-      out.result()
-    }
-    val listing = run(manifest = false)
-    val manifest = run(manifest = true)
-    assert(manifest === listing,
-      s"publish modes diverged:\n listing=$listing\n manifest=$manifest")
-    // and the expected decisions themselves (guards both modes against
-    // agreeing on the wrong answer)
-    assert(listing === Seq(Set(0L, 1L, 2L), Set.empty,
+  test("an admit/fold/split/remove/expire sequence produces the pinned " +
+    "decisions") {
+    val store = tmpDir("mfsequence")
+    val out = Seq.newBuilder[Set[Long]]
+    def admit(docs: Seq[(Long, String)], ts: Long): Set[Long] =
+      Dedup.nearDupFilterBatch(docs.toDF("doc_id", "text"), store,
+        "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
+        admittedAt = ts, suppressSince = ts - 5000L)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    out += admit(Seq((0L, textA), (1L, textB), (2L, textC)), 1000L)
+    out += admit(Seq((10L, textA), (11L, textB)), 2000L) // both dups
+    // replay of the FIRST batch at its original stamp (idempotence)
+    out += admit(Seq((0L, textA), (1L, textB), (2L, textC)), 1000L)
+    // online growth, then decisions must hold
+    val splitAddr = (0 to 1).find(b =>
+      Dedup.splitAdmittedBucket(spark, store, b) > 0L)
+    assert(splitAddr.nonEmpty, "no bucket had rows to split")
+    out += admit(Seq((20L, textA), (21L, textC),
+      (22L, "deterministic replay semantics for micro batch sinks")),
+      3000L)
+    // takedown frees re-admission of similar content
+    assert(Dedup.nearDupRemove(Seq((0L, textA)).toDF("doc_id", "text"),
+      store, "doc_id", "text", nBuckets = 2) > 0L)
+    out += admit(Seq((30L, textA), (31L, textB)), 4000L)
+    // window expiry: everything admitted before 4000 stops suppressing
+    // at suppressSince 4500 (admittedAt 9500)
+    out += admit(Seq((40L, textB), (41L, textC)), 9500L)
+    assert(out.result() === Seq(Set(0L, 1L, 2L), Set.empty,
       Set(0L, 1L, 2L), Set(22L), Set(30L), Set(40L, 41L)))
   }
 
@@ -149,8 +193,7 @@ class DedupManifestSpec extends SparkTestBase {
     val fs = fsOf(store)
     Dedup.nearDupFilterBatch(
       Seq((0L, textA), (1L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
-      manifestStore = true)
+      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0)
     val v1 = commitCount(store)
     assert(v1 >= 2, "append + fold should each commit a generation")
     // file inventory after the turn
@@ -174,12 +217,12 @@ class DedupManifestSpec extends SparkTestBase {
     assert(before.subsetOf(after),
       s"a mutation moved or deleted files inside the retention window:" +
         s" ${before -- after}")
-    // top-level layout: only staged dirs + _commits, never adm_kb= or
-    // tail/ (those are the listing layout's)
+    // top-level layout: only staged dirs + _commits, never the retired
+    // listing layout's adm_kb= or tail/ directories
     val top = fs.listStatus(new org.apache.hadoop.fs.Path(store))
       .map(_.getPath.getName).toSet
     assert(!top.exists(n => n.startsWith("adm_kb=") || n == "tail"),
-      s"manifest store leaked listing-layout directories: $top")
+      s"store root holds listing-layout directories: $top")
   }
 
   test("windowed admission, expiry in the fold, stamping, and id " +
@@ -189,7 +232,7 @@ class DedupManifestSpec extends SparkTestBase {
         : Set[Long] =
       Dedup.nearDupFilterBatch(docs.toDF("doc_id", "text"), store,
         "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
-        admittedAt = ts, suppressSince = since, manifestStore = true)
+        admittedAt = ts, suppressSince = since)
         .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(admit(Seq((0L, textA), (1L, textB)), 1000L, 0L)
       === Set(0L, 1L))
@@ -215,7 +258,7 @@ class DedupManifestSpec extends SparkTestBase {
     def admit(docs: Seq[(Long, String)]): Set[Long] =
       Dedup.nearDupFilterBatch(docs.toDF("doc_id", "text"), store,
         "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
-        autoCompactFiles = 1, manifestStore = true)
+        autoCompactFiles = 1)
         .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(admit(Seq((0L, textA), (1L, textB), (2L, textC)))
       === Set(0L, 1L, 2L))
@@ -226,7 +269,7 @@ class DedupManifestSpec extends SparkTestBase {
     assert(rep.split.nonEmpty, s"policy split nothing: $rep")
     val stats = Dedup.admissionStoreStats(spark, store)
     assert(stats.maxDepth >= 1 && stats.splitBuckets > 0 &&
-      stats.declaredBuckets.contains(2) && !stats.rebucketPending,
+      stats.declaredBuckets.contains(2),
       s"manifest stats wrong: $stats")
     assert(admit(Seq((10L, textA), (11L, textB), (12L, textC),
       (13L, "deterministic replay semantics for micro batch sinks")))
@@ -250,8 +293,7 @@ class DedupManifestSpec extends SparkTestBase {
     // seed with an un-folded tail (budget high enough not to fold)
     Dedup.nearDupFilterBatch(
       Seq((0L, textA), (1L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 16,
-      manifestStore = true)
+      store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 16)
     val racedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
     graft.functions.AdmissionManifestStore.beforeCommitFence =
       (path, _) => {
@@ -314,7 +356,7 @@ class DedupManifestSpec extends SparkTestBase {
         Seq((i.toLong, s"subject$i alpha$i bravo$i charlie$i delta$i " +
           s"echo$i foxtrot$i")).toDF("doc_id", "text"),
         store, "doc_id", "text", nBuckets = 2, tailFoldFiles = 0,
-        autoCompactFiles = 1, manifestStore = true)
+        autoCompactFiles = 1)
     val commits = commitCount(store)
     assert(commits <= 8,
       s"retention GC never dropped a commit: $commits on disk")
@@ -342,8 +384,7 @@ class DedupManifestSpec extends SparkTestBase {
       Dedup.nearDupFilterBatch(
         Seq((i.toLong, s"subject$i alpha$i bravo$i charlie$i delta$i " +
           s"echo$i foxtrot$i")).toDF("doc_id", "text"),
-        store, "doc_id", "text", nBuckets = 4, tailFoldFiles = 16,
-        manifestStore = true)
+        store, "doc_id", "text", nBuckets = 4, tailFoldFiles = 16)
     val st = new graft.functions.AdmissionManifestStore(store)
     val man = st.resolve(spark).get
     val buckets = st.allBuckets(spark, man)
@@ -378,8 +419,7 @@ class DedupManifestSpec extends SparkTestBase {
     // immediately so the bucket lists exist
     Dedup.nearDupFilterBatch(
       Seq((0L, textA), (1L, textB), (2L, textC)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 4, tailFoldFiles = 0,
-      manifestStore = true)
+      store, "doc_id", "text", nBuckets = 4, tailFoldFiles = 0)
     val st = new graft.functions.AdmissionManifestStore(store)
     val man1 = st.resolve(spark).get
     val buckets1 = st.allBuckets(spark, man1)
@@ -424,7 +464,7 @@ class DedupManifestSpec extends SparkTestBase {
     val fs = fsOf(store)
     Dedup.nearDupFilterBatch(
       Seq((0L, textA), (1L, textB)).toDF("doc_id", "text"),
-      store, "doc_id", "text", nBuckets = 2, manifestStore = true)
+      store, "doc_id", "text", nBuckets = 2)
     val commitsDir = new org.apache.hadoop.fs.Path(store, "_commits")
     val maxV = fs.listStatus(commitsDir)
       .map(_.getPath.getName.toLong).max
@@ -466,7 +506,7 @@ class DedupManifestSpec extends SparkTestBase {
     val s1 = graft.functions.Similarity.embedNearDupFilterBatch(
       first.toDF("vec_id", "embedding"), store, planes = 8, dims = 8,
       idCol = "vec_id", vecCol = "embedding", nBuckets = 2,
-      tailFoldFiles = 0, manifestStore = true)
+      tailFoldFiles = 0)
     // random gaussians CAN share an SRP bucket (within-batch
     // suppression) — what must hold is that at least one was admitted
     // and every exact duplicate is then suppressed
@@ -523,8 +563,7 @@ class DedupManifestSpec extends SparkTestBase {
         val s = Dedup.nearDupFilterBatch(
           Seq((i.toLong, text(i))).toDF("doc_id", "text"),
           store, "doc_id", "text", shingleN = 2, k = 4, bands = 2,
-          tailFoldFiles = 0, autoCompactFiles = 1, admittedAt = 1000L + i,
-          manifestStore = true)
+          tailFoldFiles = 0, autoCompactFiles = 1, admittedAt = 1000L + i)
           .select("doc_id").collect().map(_.getLong(0)).toSet
         assert(s === Set(i.toLong), s"distinct doc $i not admitted: $s")
         s.foreach(admitted.add(_))
@@ -564,5 +603,31 @@ class DedupManifestSpec extends SparkTestBase {
       store, "doc_id", "text", shingleN = 2, k = 4, bands = 2)
     assert(freedProbe.count() === removeIds.size.toLong,
       "a removed doc's keys still suppress after the takedown")
+  }
+
+  test("store schema resolution retries a failed footer read instead " +
+    "of memoizing it as no schema") {
+    import graft.functions.AdmissionSchema
+    val dir = tmpDir("mfschema")
+    Seq((0L, 1, "k")).toDF("doc_id", "band", "band_key").coalesce(1)
+      .write.parquet(s"$dir/data")
+    val fs = fsOf(dir)
+    val file = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/data"))
+      .find(_.getPath.getName.endsWith(".parquet")).get
+    val conf = spark.sparkContext.hadoopConfiguration
+    val entry = Seq((file.getPath, file.getLen))
+    // a transient failure: the footer cannot be read right now
+    val away = new org.apache.hadoop.fs.Path(s"$dir/away.parquet")
+    assert(fs.rename(file.getPath, away))
+    val cached = AdmissionSchema.cachedCount
+    assert(AdmissionSchema.of(conf, entry).isEmpty)
+    assert(AdmissionSchema.cachedCount === cached,
+      "a failed footer read was memoized")
+    // the file is readable again: the next read resolves the schema —
+    // a memoized failure would keep answering None for this file
+    assert(fs.rename(away, file.getPath))
+    assert(AdmissionSchema.of(conf, entry).map(_.fieldNames.toSeq)
+      === Some(Seq("doc_id", "band", "band_key")),
+      "the footer read was not retried after the failure")
   }
 }
